@@ -60,6 +60,9 @@ object Blocking {
         col("reduction_ratio_q"), col("pair_completeness_q"))
   }
 
+  /** Row cap of [[orPairCompleteness]]'s driver-collected input. */
+  val maxCensusRows: Int = 1 << 20
+
   /** Pair completeness of an OR-of-block-keys scheme (LSH bands: a pair
     * is retained when ANY band key matches) on a truth-keyed frame —
     * the multi-key generalization [[blockingQuality]]'s single-key
@@ -70,6 +73,8 @@ object Blocking {
     * (sampled recall probes, labeled eval sets): cost is
     * Σ_key |within-group key collisions|, never corpus pairs. The
     * corpus-scale reduction-ratio side stays with [[blockingQuality]].
+    * The input is collected to the driver, at most [[maxCensusRows]]
+    * rows.
     *
     * Output one row: n_rows, truth_pairs, covered_matches,
     * pair_completeness_q (1e-9-quantized).
@@ -81,10 +86,16 @@ object Blocking {
     // its lineage usually carries the caller's sketch pass (minhash
     // band keys) — and it sits under SIX branch executions below (the
     // truth census, both sides of each per-band covered join, n_rows).
-    // One eager localCheckpoint computes the sketch once; every branch
-    // re-reads rows (r12, guide §5 — the q128/q136 multi-branch rule).
-    val base = df.select(col(truthCol).as("__t") +: col(idCol).as("__i") +:
-      blockCols.map(col): _*).localCheckpoint()
+    // Collecting it to a LocalRelation computes the sketch once, every
+    // branch re-reads rows (the q128/q136 multi-branch rule), and
+    // nothing stays pinned in the block manager afterwards.
+    val base = graft.operators.Local(df.select(col(truthCol).as("__t") +:
+      col(idCol).as("__i") +: blockCols.map(col): _*).limit(maxCensusRows + 1))
+    require(graft.operators.Local.count(base) <= maxCensusRows,
+      s"orPairCompleteness collects its input to the driver and takes at " +
+        s"most $maxCensusRows rows: pass a sampled or labelled truth set " +
+        "(LshBlockingGenerator.selfRecallCensus samples one), or measure " +
+        "a whole corpus with blockingQuality")
     val truth = base.groupBy(col("__t")).agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(pairs(col("c"))), lit(0L)).as("truth_pairs"))
     val right = base.select(col("__t").as("__t2") +: col("__i").as("__i2") +:

@@ -3,6 +3,7 @@ package graft.candidates
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextSim
+import graft.operators.Local
 import graft.schema.PairSchema
 
 /** Strategy for J3 candidate-pair generation (reference
@@ -122,8 +123,12 @@ object CandidateGenerator {
       minCorpusForBlocking: Long = 4096L,
       minPairCompleteness: Double = 0.5,
       recallSampleSize: Int = 256): Selection = {
+    // self-ER passes the same frame twice — count, census and key each
+    // distinct frame once (reference identity; DataFrame has no value
+    // equals)
+    val distinct = sources.distinct
     def bigEnough: Boolean = minCorpusForBlocking <= 0 ||
-      sources.forall(_.count() >= minCorpusForBlocking)
+      distinct.forall(_.count() >= minCorpusForBlocking)
     // the census needs an integral id column (selfRecallCensus's truth
     // arithmetic); a source without one yields NO evidence for
     // blocking, which means the reference-exact cross scan — not a
@@ -131,33 +136,35 @@ object CandidateGenerator {
     def censusable(s: DataFrame): Boolean =
       s.schema.fields.find(_.name == "id").map(_.dataType)
         .exists(graft.operators.TopK.integralKeyType)
-    // self-ER passes the same frame twice — census each distinct
-    // frame once (reference identity; DataFrame has no value equals)
     def recallOk: Boolean = minCorpusForBlocking <= 0 ||
-      minPairCompleteness <= 0 || sources.distinct.forall { s =>
+      minPairCompleteness <= 0 || distinct.forall { s =>
         censusable(s) && LshBlockingGenerator
           .selfRecallCensus(s, sampleSize = recallSampleSize)
           .head().getAs[Long]("pair_completeness_q") >=
           math.round(minPairCompleteness * 1e9)
       }
     if ((batchSize >= 2 || costlyScorer) && bigEnough && recallOk) {
-      val handle = LshBlockingGenerator.forBatch(sources)
+      val handle = LshBlockingGenerator.forBatch(distinct)
       new Selection(handle.generator, Some(handle))
     } else new Selection(CrossJoinGenerator, None)
   }
 }
 
 /** Reference-exact J3: the probe replicates against every source record
-  * — literally Spark's BroadcastNestedLoopJoin (one pass over the
-  * source with the 1-row probe broadcast). Exhaustive recall; cost is a
-  * full scan of the opposite source per explanation.
+  * — one pass over the source. A local one-row probe (the explainer's)
+  * attaches as literals, so the pass is a single scan stage with no
+  * broadcast job; any other probe is broadcast into a
+  * BroadcastNestedLoopJoin ([[PairSchema.cross]]). Exhaustive recall;
+  * cost is a full scan of the opposite source per explanation.
   */
 case object CrossJoinGenerator extends CandidateGenerator {
   override def pairs(probe: DataFrame, source: DataFrame,
       probeIsLeft: Boolean, schema: PairSchema): DataFrame = {
     val (probePrefix, variedPrefix) = prefixes(probeIsLeft, schema)
-    val probeB = broadcast(schema.renameWithPrefix(probe, probePrefix))
-    schema.renameWithPrefix(source, variedPrefix).crossJoin(probeB)
+    val varied = schema.renameWithPrefix(source, variedPrefix)
+    if (Local.isLocal(probe) && Local.count(probe) == 1)
+      withProbeLiterals(varied, probe, probePrefix)
+    else PairSchema.cross(varied, schema.renameWithPrefix(probe, probePrefix))
   }
 }
 
@@ -227,8 +234,9 @@ object LshBlockingGenerator {
   /** Pre-key `sources` for a batch of explanations over the same
     * corpora: one sketch pass per source (paid here, eagerly), then
     * every probe in the batch is a band-key filter over the cached
-    * keyed frame. Use with the frames you pass to the explainer —
-    * `prekeyed` matches by reference identity:
+    * keyed frame; a frame passed twice (self-ER) is keyed once. Use
+    * with the frames you pass to the explainer — `prekeyed` matches by
+    * reference identity:
     * {{{
     * val batch = LshBlockingGenerator.forBatch(Seq(lsource, rsource))
     * try EvalDriver.evalCf(lsource, rsource, ..., candidateGen = batch.generator)
@@ -237,7 +245,7 @@ object LshBlockingGenerator {
     */
   def forBatch(sources: Seq[DataFrame], numBands: Int = 4,
       rowsPerBand: Int = 2, k: Int = 3): PrekeyedBlocking = {
-    val keyed = sources.map(s =>
+    val keyed = sources.distinct.map(s =>
       s -> withBandKeys(s, numBands, rowsPerBand, k).cache())
     keyed.foreach(_._2.count())
     new PrekeyedBlocking(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextSim
 import graft.matcher.ERModel
+import graft.operators.Local
 import graft.schema.PairSchema
 
 /** Support-pair search (reference local_explain.py:82-197): find records
@@ -16,15 +17,16 @@ import graft.schema.PairSchema
   * slices until k qualify, we
   *   1. cap the candidate space to the reference's total prediction
   *      budget (`batch × 20`) with TakeOrderedAndProject (no full sort,
-  *      no full shuffle),
-  *   2. score the whole capped set in one distributed pass,
+  *      no full shuffle) and collect it,
+  *   2. score the collected capped set in one pass (job-free for
+  *      column-program scorers, which fold into the local rows),
   *   3. compute per-batch qualifying counts (≤ 20 tiny rows on the
   *      driver) and keep exactly the batches the reference would have
   *      consumed.
   * Result set matches the reference's early-exit semantics while doing
-  * one job instead of ≤ 20 sequential ones. At 100 TB the crossJoin
-  * candidate generator swaps for an LSH blocking join (see
-  * graft.dedup.MinHashLsh) — the scoring/early-exit pipeline is
+  * one job per probe side instead of ≤ 20 sequential ones. At 100 TB
+  * the crossJoin candidate generator swaps for an LSH blocking join
+  * (see graft.dedup.MinHashLsh) — the scoring/early-exit pipeline is
   * unchanged.
   */
 object Candidates {
@@ -32,21 +34,6 @@ object Candidates {
   /** Deterministic stand-in for a seeded random shuffle order. */
   def shuffleKey(a: Column, b: Column, seed: Long): Column =
     xxhash64(a.cast("string"), b.cast("string"), lit(seed))
-
-  /** Row count without a Spark job when the frame folds to a
-    * LocalRelation (the batched support paths return bounded
-    * LocalRelations, and Catalyst's ConvertToLocalRelation folds
-    * projections/filters over them) — the explainer fires dozens of
-    * sub-100ms jobs per explanation and each skipped count removes a
-    * whole scheduler round-trip. Falls back to a normal count() for
-    * anything distributed, so the result is always exactly count().
-    */
-  private[graft] def boundedCount(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.size.toLong
-      case _ => df.count()
-    }
 
   /** The J3+A7+O1 candidate-pair frame and its similarity ordering for
     * one probe side — shared by [[findCandidates]] and [[support]]'s
@@ -126,25 +113,28 @@ object Candidates {
       val qual = if (findPositives) col("match_score") > 0.5 else col("match_score") < 0.5
       scored.filter(qual)
     } else {
-      // O2 early-exit batching. Budget cap first: the reference never
-      // predicts more than 20 batches, so the candidate space collapses
-      // to ≤ batch × 20 rows BEFORE scoring — TakeOrderedAndProject, no
-      // full sort. The scored, budget-capped set is then small by
-      // construction (the reference's own total prediction budget), so
-      // batch assignment and the early-exit walk run driver-side over a
-      // bounded collect and the result is a LocalRelation: one Spark job
-      // total, no cached lineage for downstream consumers to re-trigger
-      // and nothing left pinned in the block manager (the round-3 cache
-      // here leaked a frame per call across EvalDriver loops).
-      val capped = pairs.orderBy(ordCols: _*).limit(batch * 20)
-      val scored = model.predict(capped)
-      val rows = scored.orderBy(ordCols: _*).collect()
-      val kept = earlyExitKept(rows, batch, numCandidates, findPositives)
-      val spark = probe.sparkSession
-      spark.createDataFrame(java.util.Arrays.asList(kept.toIndexedSeq: _*),
-        scored.schema)
+      // O2 early-exit batching over the budget-capped, scored set
+      // (rankedScored); the walk keeps exactly the batches the reference
+      // would have consumed, and the result is a LocalRelation
+      val scored = rankedScored(pairs, ordCols, batch * 20, model)
+      val kept = earlyExitKept(scored.collect(), batch, numCandidates, findPositives)
+      Local.fromRows(probe.sparkSession, kept.toIndexedSeq, scored.schema)
     }
   }
+
+  /** The candidate pairs capped to the reference's total prediction
+    * budget (it never predicts more than 20 batches) in similarity
+    * order, scored, as a local frame whose row order IS the similarity
+    * rank. The cap is one TakeOrderedAndProject job — no full sort, no
+    * shuffle — or none when the pairs are local ([[Local.takeOrdered]]);
+    * scoring the collected rows folds into the LocalRelation for
+    * column-program scorers (a costly scorer still runs one job), and
+    * ERModel appends scores row by row, so the order survives it.
+    */
+  private def rankedScored(pairs: DataFrame, ordCols: Seq[Column],
+      budget: Int, model: ERModel): DataFrame =
+    model.predict(Local.fromRows(pairs.sparkSession,
+      Local.takeOrdered(pairs, ordCols, budget).toIndexedSeq, pairs.schema))
 
   /** The reference's early-exit batch walk over the budget-capped,
     * similarity-ordered scored rows: consume `batch`-sized windows until
@@ -217,8 +207,8 @@ object Candidates {
           numCandidates, maxPredict, seed, batched = false, schema, gen)
       else empty
 
-      val n1 = if (useRight) boundedCount(c4r1) else 0L
-      val n2 = if (useLeft) boundedCount(c4r2) else 0L
+      val n1 = if (useRight) Local.count(c4r1) else 0L
+      val n2 = if (useLeft) Local.count(c4r2) else 0L
       val both = math.min(n1, n2)
       val maxLen = if (both == 0) math.max(n1, n2) else both
 
@@ -244,50 +234,34 @@ object Candidates {
       return (findPositives, neighborhood)
     }
 
-    // Batched (default) path, fused (r12, guide §1.2): the two sides'
-    // budget-capped scored searches are INDEPENDENT bounded subtrees, so
-    // they ride ONE union + ONE collect (one scheduler round-trip where
-    // two findCandidates collects ran sequentially before); everything
-    // after the collect — the reference's early-exit batch walk, the O6
-    // balance cap, the O5 union/shuffle keys and the polarity filter —
-    // is driver arithmetic over the ≤ 2·batch·20 collected rows and the
-    // result is a true LocalRelation (downstream counts are job-free).
-    // Row-for-row identical to the sequential path: each side keeps its
-    // own similarity ordering via a per-side row_number (__rank) over
-    // the same ordCols the sequential collect sorted by, and the cap /
-    // shuffle keys are computed IN-frame by the same expressions
-    // (xxhash64, pairId) the lazy path evaluated, so no driver
-    // re-implementation of Spark semantics is involved.
-    import org.apache.spark.sql.expressions.Window
+    // Batched (default) path. Per side, the budget-capped similarity
+    // ranking is one job (none over local pairs, as in the G2 augmented
+    // search) and its scoring folds into the collected rows
+    // (rankedScored). Everything after — the reference's early-exit
+    // batch walk, the O6 balance cap, the O5 shuffle keys and the
+    // polarity filter — is driver arithmetic over ≤ 2·batch·20 rows, and
+    // the result is a LocalRelation (downstream counts are job-free).
+    // The cap and shuffle keys are computed in-frame by the same
+    // expressions (xxhash64, pairId) the lazy path evaluates, so no
+    // Spark semantics are re-implemented on the driver.
     val batch = numCandidates * 4
     val sides: Seq[(DataFrame, DataFrame, Boolean)] = Seq(
       if (useRight) Some((lRecord, rsource, true)) else None,
       if (useLeft) Some((rRecord, lsource, false)) else None).flatten
     if (sides.isEmpty) return (findPositives, empty)
-    var scoredSchema: org.apache.spark.sql.types.StructType = null
-    val tagged = sides.zipWithIndex.map { case ((probe, src, isL), i) =>
+    val ranked = sides.map { case (probe, src, isL) =>
       val (pairs, ordCols) = candidatePairs(probe, src, isL, findPositives,
         numCandidates, maxPredict, seed, schema, gen)
-      val capped = pairs.orderBy(ordCols: _*).limit(batch * 20)
-      val scored = model.predict(capped)
-      if (scoredSchema == null) scoredSchema = scored.schema
-      scored
-        .withColumn("__rank", row_number().over(Window.orderBy(ordCols: _*)))
-        .withColumn("__side", lit(i))
-        .withColumn("__capkey", shuffleKey(col(schema.lid), col(schema.rid), seed))
-        .withColumn("__supid", schema.pairId(col(schema.lid), col(schema.rid)))
-        .withColumn("__supshuffle", shuffleKey(
-          schema.pairId(col(schema.lid), col(schema.rid)), lit(""), seed + 1))
+      rankedScored(pairs, ordCols, batch * 20, model)
     }
-    val all = tagged.reduce(_ unionByName _).collect()
-    val sideIdx = all.headOption.map(_.fieldIndex("__side"))
-      .getOrElse(-1)
-    val rankIdx = all.headOption.map(_.fieldIndex("__rank")).getOrElse(-1)
-    val keptBySide: IndexedSeq[Array[org.apache.spark.sql.Row]] =
-      sides.indices.map { i =>
-        val rows = all.filter(_.getInt(sideIdx) == i).sortBy(_.getInt(rankIdx))
-        earlyExitKept(rows, batch, numCandidates, findPositives)
-      }
+    val scoredSchema = ranked.head.schema
+    val keyed = ranked.map(_
+      .withColumn("__capkey", shuffleKey(col(schema.lid), col(schema.rid), seed))
+      .withColumn("__supid", schema.pairId(col(schema.lid), col(schema.rid)))
+      .withColumn("__supshuffle", shuffleKey(
+        schema.pairId(col(schema.lid), col(schema.rid)), lit(""), seed + 1)))
+    val keptBySide = keyed.map(df =>
+      earlyExitKept(df.collect(), batch, numCandidates, findPositives))
     // O6 balance semantics, exactly as before: n1 is the right-search
     // count when enabled else 0, n2 the left-search count; both = min,
     // maxLen = max when one side is empty/disabled.
@@ -299,7 +273,8 @@ object Candidates {
     val n2 = sideN(false)
     val both = math.min(n1, n2)
     val maxLen = if (both == 0) math.max(n1, n2) else both
-    val capIdx = all.headOption.map(_.fieldIndex("__capkey")).getOrElse(-1)
+    val keySchema = keyed.head.schema
+    val capIdx = keySchema.fieldIndex("__capkey")
     val capped = keptBySide.map { rows =>
       if (rows.length > maxLen) rows.sortBy(_.getLong(capIdx)).take(maxLen.toInt)
       else rows
@@ -312,8 +287,8 @@ object Candidates {
     val keepRow: org.apache.spark.sql.Row => Boolean =
       if (findPositives) r => r.getDouble(msIdx) >= 0.5
       else r => r.getDouble(msIdx) < 0.5
-    val supIdIdx = all.headOption.map(_.fieldIndex("__supid")).getOrElse(-1)
-    val supShufIdx = all.headOption.map(_.fieldIndex("__supshuffle")).getOrElse(-1)
+    val supIdIdx = keySchema.fieldIndex("__supid")
+    val supShufIdx = keySchema.fieldIndex("__supshuffle")
     val nScored = scoredSchema.length
     val outRows = candidateRows.filter(keepRow).map { r =>
       org.apache.spark.sql.Row.fromSeq(
@@ -325,7 +300,6 @@ object Candidates {
           org.apache.spark.sql.types.StringType, nullable = true),
         org.apache.spark.sql.types.StructField("__shuffle",
           org.apache.spark.sql.types.LongType, nullable = true)))
-    (findPositives, spark.createDataFrame(
-      java.util.Arrays.asList(outRows.toIndexedSeq: _*), outSchema))
+    (findPositives, Local.fromRows(spark, outRows.toIndexedSeq, outSchema))
   }
 }

@@ -7,16 +7,22 @@ import org.apache.spark.sql.functions._
 import graft.explain.CertaExplainer
 import graft.matcher.ERModel
 import graft.metrics.CfMetrics
+import graft.operators.Local
+import graft.perturb.Perturb
 import graft.schema.PairSchema
 import graft.sources.ErSources
 
 /** Batch evaluation driver (reference eval.py §3.2): explain every test
   * pair, persist per-row explanation outputs, compute CF quality
   * metrics. Explanations are independent → the loop is the reference's
-  * embarrassingly-parallel per-row driver loop; each iteration's body is
-  * fully distributed. File-level memoization (skip when the output
-  * exists) keeps reruns resumable, as the reference's csv-exists checks
-  * do (eval.py:87-88).
+  * embarrassingly-parallel per-row driver loop. Every pair's records are
+  * fetched up front, in one scan per distinct source, and each
+  * explanation gets them as local frames: its probe side (pair
+  * assembly, original prediction, probe band keys, G2 search) runs on
+  * the driver, and only the stages that read the sources or the
+  * perturbations run Spark jobs. File-level memoization (skip when the
+  * output exists) keeps reruns resumable, as the reference's csv-exists
+  * checks do (eval.py:87-88).
   */
 object EvalDriver {
 
@@ -105,6 +111,28 @@ object EvalDriver {
       case g => new graft.candidates.CandidateGenerator.Selection(g, None)
     }
 
+  /** Each item's (left, right) records as local frames
+    * ([[graft.operators.Local]]), fetched with one `id IN (…)` scan per
+    * distinct source (self-ER passes one frame twice — one scan). A
+    * duplicated id keeps every row, as `filter(col("id") === id)` would.
+    */
+  private def pairRecords(items: Seq[Row], lsource: DataFrame,
+      rsource: DataFrame): Seq[(DataFrame, DataFrame)] = {
+    def ids(key: String) = items.map(_.getAs[Number](key).longValue().toString)
+    val lids = ids("ltable_id")
+    val rids = ids("rtable_id")
+    val sources = Seq(lsource, rsource).distinct
+    val byId = sources.map { src =>
+      val want = (if (src eq lsource) lids else Nil) ++ (if (src eq rsource) rids else Nil)
+      Perturb.fetchRecords(src, want.distinct).toIndexedSeq
+        .groupBy(r => String.valueOf(r.getAs[Any]("id")))
+    }
+    def records(src: DataFrame, id: String): DataFrame =
+      Local.fromRows(src.sparkSession,
+        byId(sources.indexWhere(_ eq src)).getOrElse(id, Nil), src.schema)
+    lids.zip(rids).map { case (l, r) => (records(lsource, l), records(rsource, r)) }
+  }
+
   final case class CfRow(
       ltableId: Long, rtableId: Long, label: Int,
       latencySec: Double, nCf: Long,
@@ -135,13 +163,11 @@ object EvalDriver {
     val explainer = new CertaExplainer(lsource, rsource, schema,
       candidateGen = selection.generator)
 
-    val rows = try parMap(items, parallelism,
-        spark) { tp =>
+    val rows = try parMap(items.zip(pairRecords(items, lsource, rsource)),
+        parallelism, spark) { case (tp, (lRec, rRec)) =>
       val lid = tp.getAs[Number]("ltable_id").longValue()
       val rid = tp.getAs[Number]("rtable_id").longValue()
       val label = tp.getAs[Number]("label").intValue()
-      val lRec = lsource.filter(col("id") === lid)
-      val rRec = rsource.filter(col("id") === rid)
 
       def timed[T](f: => T): (T, Double) = {
         val t0 = System.nanoTime()
@@ -217,19 +243,20 @@ object EvalDriver {
     val selection = resolveGen(candidateGen, lsource, rsource, items.size, model)
     val explainer = new CertaExplainer(lsource, rsource, schema,
       candidateGen = selection.generator)
-    val rows = try parMap(items, parallelism,
-        spark) { tp =>
+    val rows = try parMap(items.zip(pairRecords(items, lsource, rsource)),
+        parallelism, spark) { case (tp, (lRec, rRec)) =>
       val lid = tp.getAs[Number]("ltable_id").longValue()
       val rid = tp.getAs[Number]("rtable_id").longValue()
       val label = tp.getAs[Number]("label").intValue()
       val cfPath = s"$outDir/cf_${lid}_$rid"
       val t0 = System.nanoTime()
 
-      val lRec = lsource.filter(col("id") === lid)
-      val rRec = rsource.filter(col("id") === rid)
-      val origScores = model.predict(schema.assemblePair(lRec, rRec))
-        .select(col("nomatch_score"), col("match_score")).head()
-      val pc = if (origScores.getDouble(1) > origScores.getDouble(0)) 1 else 0
+      // the one original prediction: pc here, the CF metrics' reference
+      // row below (local records → the prediction folds, no job)
+      val pair = schema.assemblePair(lRec, rRec)
+      val original = model.predict(pair).head()
+      val pc = if (original.getAs[Double]("match_score") >
+        original.getAs[Double]("nomatch_score")) 1 else 0
       val classScoreCol = if (pc == 1) "match_score" else "nomatch_score"
 
       val result =
@@ -266,24 +293,22 @@ object EvalDriver {
       if (result.cfExamples.columns.isEmpty) {
         CfRow(lid, rid, label, latency, 0L, 0.0, 0.0, 0.0, 0.0)
       } else {
-        val cf = result.cfExamples.limit(cfSample).cache()
-        val nCf = cf.count()
+        // cfExamples is local, and so is its limit: no cache, no count job
+        val cf = result.cfExamples.limit(cfSample)
+        val nCf = Local.count(cf)
         if (!Files.exists(Paths.get(cfPath)))
           ErSources.writeCsv(cf.withColumn("alteredAttributes",
               array_join(col("alteredAttributes"), "/"))
             .withColumn("droppedValues", array_join(col("droppedValues"), "/"))
             .withColumn("copiedValues", array_join(col("copiedValues"), "/")),
             cfPath)
-        val original = model.predict(schema.assemblePair(lRec, rRec)).head()
-        val attrs = schema.pairAttributes(
-          schema.assemblePair(lRec, rRec))
+        val attrs = schema.pairAttributes(pair)
         val m = if (nCf == 0) CfRow(lid, rid, label, latency, 0L, 0.0, 0.0, 0.0, 0.0)
         else CfRow(lid, rid, label, latency, nCf,
           CfMetrics.validity(cf, classScoreCol),
           CfMetrics.proximity(cf, original, attrs),
           CfMetrics.sparsity(cf, original, attrs),
           CfMetrics.diversity(cf, attrs))
-        cf.unpersist()
         m
       }
     } finally selection.close()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.candidates.Candidates
 import graft.matcher.ERModel
+import graft.operators.Local
 import graft.perturb.Perturb
 import graft.schema.PairSchema
 import graft.triangles.Triangles
@@ -27,8 +28,12 @@ final case class Explanation(
 /** CERTA explainer (reference explain.py:34-158, §3.1 of SURVEY.md),
   * Spark-native: the driver orchestrates the stage sequence and the
   * per-depth lattice loop (with the reference's monotonicity shortcut,
-  * triangles_method.py:301-327); every stage body is a distributed
-  * DataFrame program. No per-triangle driver loops anywhere.
+  * triangles_method.py:301-327). Stages that read the sources — the
+  * support search's ranked scan, vertex resolution — and the per-depth
+  * perturb-and-predict are DataFrame programs; the probe side (the two
+  * records, their pair, the G2-generated records) is local from the
+  * first stage on ([[graft.operators.Local]]), so its steps fold into
+  * LocalRelations and run no job. No per-triangle driver loops anywhere.
   */
 /** @param candidateGen J3 strategy for the support search (SURVEY §4):
   *   the default [[graft.candidates.AutoSelect]] resolves cost-based at
@@ -84,6 +89,16 @@ class CertaExplainer(
     selections.clear()
   }
 
+  /** Both source maxima in ONE job — the only full-source aggregates in
+    * the G2 fallback. The sources never change for one explainer, so
+    * this runs at most once per instance, whatever the batch size.
+    */
+  private lazy val maxIds: (Long, Long) = staged("source max ids") {
+    val r = lsource.agg(max(col("id")).as("m"))
+      .crossJoin(rsource.agg(max(col("id")).as("m2"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** Tag the Spark jobs of one explainer stage (shows up in listeners /
     * the UI; stage-level attribution is how the 100 TB tuning loop
     * finds its bottleneck).
@@ -93,25 +108,16 @@ class CertaExplainer(
     try f finally spark.sparkContext.setJobDescription(null)
   }
 
-  /** Materialize a bounded frame as a LocalRelation: downstream
-    * consumers re-read rows instead of re-deriving lineage (every frame
-    * localized here is powerset- or num_triangles-bounded — the same
-    * sets the reference holds in pandas).
-    */
-  private def localize(df: DataFrame): DataFrame =
-    if (df.columns.isEmpty) df
-    else spark.createDataFrame(java.util.Arrays.asList(df.collect().toIndexedSeq: _*), df.schema)
-
-  /** count() that skips the Spark job when the frame folds to a
-    * LocalRelation ([[graft.candidates.Candidates.boundedCount]]) — an
-    * explanation is a sequence of dozens of tiny jobs whose scheduler
-    * round-trips, not task work, dominate its wall clock.
-    */
-  private def boundedCount(df: DataFrame): Long =
-    graft.candidates.Candidates.boundedCount(df)
+  // Every frame made Local below is powerset-, num_triangles- or
+  // record-bounded — the same sets the reference holds in pandas — so
+  // downstream consumers re-read rows instead of re-deriving lineage,
+  // and counts over them are job-free.
 
   /** Explain the model's prediction on (lRecord, rRecord): 1-row
     * un-prefixed entity frames, as in reference explain(l_tuple, r_tuple).
+    * Pass local frames ([[graft.operators.Local]], as
+    * [[graft.eval.EvalDriver]] does) to skip the one collect per record
+    * that localizes any other input at entry.
     */
   /** @param check      score the 12 invariant probes per triangle
     *                    (identity/symmetry/transitivity) and return the
@@ -162,25 +168,24 @@ class CertaExplainer(
     val attrLength =
       if (attrLengthOpt > 0) attrLengthOpt else math.min(lAttrs.size, rAttrs.size)
 
-    // stage 2: original prediction (1-row job; driver argmax O8). The
-    // WHOLE predicted row is collected (not just the two scores): the
-    // pair row itself re-binds as a LocalRelation so the support-pair
-    // assembly below never re-plans the two source scans (r12 —
-    // scheduler-round-trip diet, guide §1.2).
-    val pairUnderExplanation0 = schema.assemblePair(lRecord, rRecord)
-    val orig = staged("original prediction")(
-      model.predict(pairUnderExplanation0).head())
+    // stage 2: original prediction (driver argmax O8). The records are
+    // localized first (no job when they already are), so the pair
+    // assembly is a driver-side product — its first row is the pair
+    // under explanation — and a column-program scorer's prediction folds
+    // into it: no job at all for local records.
+    val (lRec, rRec, pairUnderExplanation, orig) = staged("original prediction") {
+      val l = Local(lRecord)
+      val r = Local(rRecord)
+      val pair = schema.assemblePair(l, r).limit(1)
+      (l, r, pair, model.predict(pair).head())
+    }
     val pc = if (orig.getAs[Double]("match_score") >
       orig.getAs[Double]("nomatch_score")) 1 else 0
-    val pairUnderExplanation = spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(
-        pairUnderExplanation0.columns.toIndexedSeq
-          .map(c => orig.get(orig.fieldIndex(c))))),
-      pairUnderExplanation0.schema)
 
-    // stage 3: support search (batched → bounded LocalRelation result)
+    // stage 3: support search (bounded LocalRelation result: per probe
+    // side one ranked scan of the opposite source, scored on the driver)
     val (_, neighborhood0) = staged("support search")(Candidates.support(
-      lRecord, rRecord, lsource, rsource, pc, model, numTriangles,
+      lRec, rRec, lsource, rsource, pc, model, numTriangles,
       maxPredict, useLeft, useRight, seed = seed, schema = schema,
       gen = gen))
     if (neighborhood0.columns.isEmpty) return emptyExplanation()
@@ -189,15 +194,14 @@ class CertaExplainer(
     // short, search again among prefix/suffix-perturbed copies of the
     // probe records; generated records extend the sources the triangle
     // stages resolve against (explain.py:67). The generated frames are
-    // tiny (2·Σ(tokens-1) rows per probe attribute) — localized so the
-    // repeated counts and the extended-source unions replay nothing.
+    // tiny (2·Σ(tokens-1) rows per probe attribute) and local, so the
+    // counts, the augmented search over them and the extended-source
+    // unions replay nothing.
     //
-    // r12: the support rows live driver-side from here on (the fused
-    // search returns true LocalRelations, so the collect is job-free) —
-    // the count, the G2 union, the O3 truncation sort and the F9
-    // labeling below are driver arithmetic over ≤ 2·numTriangles
-    // bounded rows, replacing a count job, a union job and the
-    // window+localize job per explanation.
+    // The support rows live driver-side from here on (the search
+    // returns true LocalRelations, so the collect is job-free) — the
+    // count, the G2 union, the O3 truncation sort and the F9 labeling
+    // below are driver arithmetic over ≤ 2·numTriangles bounded rows.
     var nbRows: IndexedSeq[org.apache.spark.sql.Row] =
       neighborhood0.collect().toIndexedSeq
     val nbSchema = neighborhood0.schema
@@ -205,22 +209,15 @@ class CertaExplainer(
     var extendedR = rsource
     val n0 = nbRows.size.toLong
     if (n0 < numTriangles) {
-      // both source maxima in ONE job (these are the only two full-source
-      // aggregates in the fallback; two sequential 1-row jobs doubled the
-      // scheduler round-trips here)
-      val maxIds = staged("source max ids")(
-        lsource.agg(max(col("id")).as("m"))
-          .crossJoin(rsource.agg(max(col("id")).as("m2"))).head())
-      val maxLid = maxIds.getLong(0)
-      val maxRid = maxIds.getLong(1)
+      val (maxLid, maxRid) = maxIds
       // variants of the left probe serve as right-side candidates & v.v.
-      val genFromL = localize(staged("augment")(graft.perturb.Augment
-        .generateSubsequences(lRecord, startId = maxRid + 1)))
-      val genFromR = localize(staged("augment")(graft.perturb.Augment
-        .generateSubsequences(rRecord, startId = maxLid + 1)))
-      if (boundedCount(genFromL) > 0 && boundedCount(genFromR) > 0) {
+      val genFromL = staged("augment")(graft.perturb.Augment
+        .generateSubsequences(lRec, startId = maxRid + 1))
+      val genFromR = staged("augment")(graft.perturb.Augment
+        .generateSubsequences(rRec, startId = maxLid + 1))
+      if (Local.count(genFromL) > 0 && Local.count(genFromR) > 0) {
         val (_, support2) = staged("augmented support search")(Candidates.support(
-          lRecord, rRecord, genFromR, genFromL, pc, model, numTriangles,
+          lRec, rRec, genFromR, genFromL, pc, model, numTriangles,
           maxPredict, useLeft, useRight, seed = seed, schema = schema,
           gen = gen))
         if (support2.columns.nonEmpty) {
@@ -293,8 +290,8 @@ class CertaExplainer(
     // stage 4: triangle discovery (pos×neg self-joins over the bounded
     // local support set; result localized — ≤ (numTriangles/2)² rows)
     val discovered = staged("triangle discovery")(
-      localize(Triangles.discover(supportPairs, schema)))
-    if (boundedCount(discovered) == 0) return emptyExplanation()
+      Local(Triangles.discover(supportPairs, schema)))
+    if (Local.count(discovered) == 0) return emptyExplanation()
 
     // G6 invariant probes (reference triangles_method.py:280-283): the
     // reference re-scores check_properties per triangle per depth; the
@@ -304,15 +301,15 @@ class CertaExplainer(
     val (triangles, flaggedTriangles) =
       if (!check) (discovered, discovered)
       else {
-        val flags = staged("invariant checks")(localize(
+        val flags = staged("invariant checks")(Local(
           Invariants.checkAll(discovered, extendedL, extendedR, model, schema)))
         if (discardBad)
-          (localize(flags.filter(col("transitivity"))
+          (Local(flags.filter(col("transitivity"))
             .select(col("u"), col("v"), col("w"))),
-            localize(flags.filter(col("transitivity"))))
+            Local(flags.filter(col("transitivity"))))
         else (discovered, flags)
       }
-    val nTriangles = boundedCount(triangles)
+    val nTriangles = Local.count(triangles)
     if (nTriangles == 0) return emptyExplanation()
 
     // stage 5: lattice-stratified perturb & predict with monotonicity
@@ -446,7 +443,7 @@ class CertaExplainer(
     // localized: all outputs survive the finally-unpersist of the
     // per-depth prediction caches they derive from (and, like the
     // reference's returned pandas frames, cost nothing to re-read)
-    val cfExamples = staged("cf examples")(localize(flippedAll
+    val cfExamples = staged("cf examples")(Local(flippedAll
       .filter(array_join(col("alteredAttributes"), "/")
         .isin(summaryKeys.toIndexedSeq: _*))
       .dropDuplicates("copiedValues", "alteredAttributes", "droppedValues")

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * (2·Σ(tokens-1) rows per record per attribute) happens executor-side.
   * Fresh ids are `offset + rank` in a deterministic total order,
   * assigned with a range-partitioned sort + zipWithIndex (never a
-  * single-partition global window).
+  * single-partition global window), or on the driver when the source
+  * is local.
   */
 object Augment {
 
@@ -61,29 +62,38 @@ object Augment {
   def generateSubsequences(source: DataFrame, startId: Long,
       attrs: Seq[String] = Nil): DataFrame = {
     val (generated, targetAttrs) = subsequenceVariants(source, attrs)
-    // fresh deterministic ids: global sort (range-partitioned — no
-    // single-partition window) + zipWithIndex. The index is the row's
-    // rank in a total order, so ids are deterministic regardless of
-    // partitioning. The primary sort key is an 8-byte hash of the
-    // (attrs, old id) tuple, NOT the attribute strings themselves —
-    // range-sorting millions of document-length strings dominated the
-    // generator's cost (7 s → 1.5 s on the sf0.1 census); the string
-    // columns remain as tiebreakers so the order stays total even on
-    // hash collisions.
-    val spark = source.sparkSession
+    // fresh deterministic ids: the row's rank in a total order, so ids
+    // do not depend on partitioning. The primary sort key is an 8-byte
+    // hash of the (attrs, old id) tuple, NOT the attribute strings
+    // themselves — range-sorting millions of document-length strings
+    // dominated the generator's cost (7 s → 1.5 s on the sf0.1 census);
+    // the string columns remain as tiebreakers so the order stays total
+    // even on hash collisions.
     val sortCols =
       xxhash64(targetAttrs.map(col) :+ col("id").cast("string"): _*) +:
         (targetAttrs.map(col) :+ col("id").cast("string"))
-    val sorted = generated.orderBy(sortCols: _*)
     val outSchema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields.map(f =>
+      generated.schema.fields.map(f =>
         if (f.name == "id") f.copy(dataType = org.apache.spark.sql.types.LongType)
         else f))
-    val idIdx = sorted.schema.fieldIndex("id")
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
+    val idIdx = generated.schema.fieldIndex("id")
+    def withId(r: org.apache.spark.sql.Row, i: Long) =
       org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(idIdx, startId + i))
+    if (graft.operators.Local.isLocal(source)) {
+      // a local source (G2's probe records) generates ≤ 2·Σ(tokens-1)
+      // rows: one single-partition sort job, ids assigned on the driver,
+      // and the result stays local for the searches that read it
+      val rows = generated.coalesce(1).sortWithinPartitions(sortCols: _*).collect()
+      graft.operators.Local.fromRows(source.sparkSession,
+        rows.toIndexedSeq.zipWithIndex.map { case (r, i) => withId(r, i.toLong) },
+        outSchema)
+    } else {
+      // range-partitioned global sort + zipWithIndex — never a
+      // single-partition global window
+      val indexed = generated.orderBy(sortCols: _*).rdd.zipWithIndex()
+        .map { case (r, i) => withId(r, i) }
+      source.sparkSession.createDataFrame(indexed, outSchema)
     }
-    spark.createDataFrame(indexed, outSchema)
   }
 
   /** G2 expand_copies (reference local_explain.py:237-302): the same

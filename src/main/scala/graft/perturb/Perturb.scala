@@ -1,6 +1,6 @@
 package graft.perturb
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.schema.PairSchema
 
@@ -47,6 +47,22 @@ object Perturb {
       left: DataFrame, right: DataFrame,
       lAttrs: Seq[String], rAttrs: Seq[String])
 
+  /** The rows of `src` whose `id` renders as one of `ids`, in scan
+    * order, duplicates kept: ONE filtered scan, with the IN filter typed
+    * to the id column so it reaches the parquet reader (a cast on the
+    * column side would block pushdown). No job for no ids.
+    */
+  private[graft] def fetchRecords(src: DataFrame, ids: Seq[String]): Array[Row] = {
+    if (ids.isEmpty) return Array.empty
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val pred = src.schema("id").dataType match {
+      case LongType => col("id").isin(ids.map(_.toLong): _*)
+      case IntegerType => col("id").isin(ids.map(_.toInt): _*)
+      case _ => col("id").isin(ids: _*)
+    }
+    src.filter(pred).collect()
+  }
+
   /** Resolve each triangle's three vertices to their records — once, for
     * all depths. Triangles are ≤ O(num_triangles²) rows by construction
     * (positives × negatives of a truncated support set), so the vertex
@@ -63,8 +79,7 @@ object Perturb {
       rsource: DataFrame,
       schema: PairSchema = PairSchema.default): ResolvedTriangles = {
 
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, IntegerType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
     val spark = triangles.sparkSession
     val lAttrs = lsource.columns.filter(_ != "id").toIndexedSeq
@@ -84,21 +99,10 @@ object Perturb {
     val rIds = (rightTri.flatMap(r => Seq(recId(r.getString(0)), recId(r.getString(2)))) ++
       leftTri.map(r => recId(r.getString(1)))).distinct
 
-    // one filtered scan per source; the IN filter is typed to the id
-    // column so it reaches the parquet reader (a cast on the column
-    // side would block pushdown)
-    def fetch(src: DataFrame, ids: Array[String]): Map[String, Row] = {
-      if (ids.isEmpty) return Map.empty
-      val pred = src.schema("id").dataType match {
-        case LongType => col("id").isin(ids.map(_.toLong).toIndexedSeq: _*)
-        case IntegerType => col("id").isin(ids.map(_.toInt).toIndexedSeq: _*)
-        case _ => col("id").isin(ids.toIndexedSeq: _*)
-      }
-      src.filter(pred).collect()
-        .map(r => String.valueOf(r.getAs[Any]("id")) -> r).toMap
-    }
-    val lRecs = fetch(lsource, lIds)
-    val rRecs = fetch(rsource, rIds)
+    def fetch(src: DataFrame, ids: Seq[String]): Map[String, Row] =
+      fetchRecords(src, ids).map(r => String.valueOf(r.getAs[Any]("id")) -> r).toMap
+    val lRecs = fetch(lsource, lIds.toIndexedSeq)
+    val rRecs = fetch(rsource, rIds.toIndexedSeq)
 
     def side(tri: Array[Row], freeSrc: DataFrame, freeRecs: Map[String, Row],
         pivotSrc: DataFrame, pivotRecs: Map[String, Row]): DataFrame = {

@@ -241,15 +241,10 @@ object ErQueries {
       val src = erSource(s, dir)
       val l = src.filter(col("id") === 0)
       val r = src.filter(col("id") === 0)
-      val e = new CertaExplainer(src, src).explain(l, r, TokenCosineModel(),
+      // explain's outputs are local frames, so the memo survives cache
+      // clearing without recompute
+      new CertaExplainer(src, src).explain(l, r, TokenCosineModel(),
         numTriangles = 10)
-      // materialize the (tiny) outputs as local frames so the memoized
-      // explanation survives cache clearing without recompute
-      def localize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        if (df.columns.isEmpty) df
-        else s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-      Explanation(localize(e.saliency), localize(e.pss), localize(e.cfSummary),
-        localize(e.cfExamples), localize(e.triangles))
     })
 
   /** Full CERTA saliency explanation (reference explain.py:34-158) of a
@@ -321,13 +316,8 @@ object ErQueries {
     goldenCache.getOrElseUpdate(dir, {
       val src = goldenSource(s, dir)
       val l = src.filter(col("id") === 0)
-      val e = new CertaExplainer(src, src).explain(l, l, TokenCosineModel(),
+      new CertaExplainer(src, src).explain(l, l, TokenCosineModel(),
         numTriangles = 10)
-      def localize(df: DataFrame): DataFrame =
-        if (df.columns.isEmpty) df
-        else s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-      Explanation(localize(e.saliency), localize(e.pss), localize(e.cfSummary),
-        localize(e.cfExamples), localize(e.triangles))
     })
 
   def q60GoldenSaliency(s: SparkSession, dir: String): DataFrame =

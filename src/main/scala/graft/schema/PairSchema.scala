@@ -1,7 +1,9 @@
 package graft.schema
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.operators.Local
 
 /** The record-pair schema convention of the reference engine: a pair
   * table is a wide frame with left attributes prefixed `ltable_` and
@@ -49,15 +51,12 @@ final case class PairSchema(lprefix: String = "ltable_", rprefix: String = "rtab
     vertex.startsWith("0@")
 
   /** J1 pair assembly: cross of two single-record frames with prefix
-    * renames (reference utils.py:4-10 get_row). Both inputs are single
-    * records by contract but usually arrive as filtered frames the
-    * planner can't size — broadcast the right side so this plans as a
-    * BroadcastNestedLoopJoin, never a CartesianProduct whose task count
-    * is the product of both sides' partition counts.
+    * renames (reference utils.py:4-10 get_row), via [[PairSchema.cross]]
+    * — driver-side and job-free for local records.
     */
   def assemblePair(lRecord: DataFrame, rRecord: DataFrame): DataFrame =
-    renameWithPrefix(lRecord, lprefix)
-      .crossJoin(broadcast(renameWithPrefix(rRecord, rprefix)))
+    PairSchema.cross(renameWithPrefix(lRecord, lprefix),
+      renameWithPrefix(rRecord, rprefix))
 
   /** J2 merge_sources (reference utils.py:13-30): resolve
     * (ltable_id, rtable_id, label) rows against both entity sources via
@@ -82,4 +81,20 @@ final case class PairSchema(lprefix: String = "ltable_", rprefix: String = "rtab
 
 object PairSchema {
   val default: PairSchema = PairSchema()
+
+  /** `a × b`, columns of `a` first. When both sides are local
+    * ([[graft.operators.Local]]) the product is built on the driver and
+    * stays local, so whatever reads it runs no job. Otherwise `b` is
+    * broadcast, so this plans as a BroadcastNestedLoopJoin — never a
+    * CartesianProduct whose task count is the product of both sides'
+    * partition counts. Rows come in the join's order either way: each
+    * row of `a` with every row of `b`.
+    */
+  private[graft] def cross(a: DataFrame, b: DataFrame): DataFrame =
+    if (Local.isLocal(a) && Local.isLocal(b)) {
+      val bRows = b.collect()
+      Local.fromRows(a.sparkSession,
+        a.collect().toIndexedSeq.flatMap(x => bRows.map(y => Row.fromSeq(x.toSeq ++ y.toSeq))),
+        StructType(a.schema.fields ++ b.schema.fields))
+    } else a.crossJoin(broadcast(b))
 }
